@@ -18,6 +18,14 @@ import graft.streaming.{AnalysisStream, CrawlStreams}
   * `--available-now` = S4 drain-and-stop: process everything present, emit
   * one final snapshot, exit (the reference's consumer_timeout_ms idle-stop,
   * made deterministic).
+  *
+  * The per-host state lives in `spark.sql.shuffle.partitions` state-store
+  * partitions. A checkpoint takes the session's count at its first start
+  * (the core count: see `JobSession.local`) and keeps it from then on;
+  * override it with `-Dspark.sql.shuffle.partitions=N` or
+  * `spark-submit --conf spark.sql.shuffle.partitions=N` before that first
+  * start. A checkpoint created before the core-count default keeps
+  * Spark's 200.
   */
 object AnalysisMain {
   private val usage = "usage: AnalysisMain <inputDir> <snapshotPath> " +

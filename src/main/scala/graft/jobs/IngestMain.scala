@@ -20,6 +20,14 @@ import graft.streaming.PipelineStreams
   *
   * Usage: IngestMain <docs.jsonl> <corpus.parquet> <outDir> <checkpointDir>
   *                   [maxXent] [--available-now]
+  *
+  * The chain's dedup and window state lives in
+  * `spark.sql.shuffle.partitions` state-store partitions. A checkpoint
+  * takes the session's count at its first start (the core count: see
+  * `JobSession.local`) and keeps it from then on; override it with
+  * `-Dspark.sql.shuffle.partitions=N` or `spark-submit --conf
+  * spark.sql.shuffle.partitions=N` before that first start. A checkpoint
+  * created before the core-count default keeps Spark's 200.
   */
 object IngestMain {
   private val usage = "usage: IngestMain <docs.jsonl> <corpus.parquet> " +

@@ -1,5 +1,6 @@
 package graft.jobs
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.CrawlCols
@@ -19,6 +20,28 @@ private[jobs] object JobSession {
     throw new IllegalStateException("unreachable")
   }
 
+  private[jobs] val ShufflePartitions = "spark.sql.shuffle.partitions"
+
+  /** The shuffle (and so state-store) partition count a session must be
+    * given: the core count, unless the SparkConf already names one
+    * (`-Dspark.sql.shuffle.partitions=N`, `spark-submit --conf`), which
+    * then stands — `None` means "leave the session as configured". Spark's
+    * own default of 200 makes every micro-batch of a stateful query run
+    * 200 state-store tasks, whose fixed load/commit cost swamps a small
+    * batch. A streaming checkpoint records the count at its first start
+    * and a restart reuses it, so this only sizes new checkpoints.
+    */
+  private[jobs] def coreSizedPartitions(conf: SparkConf,
+      cores: Int): Option[Int] =
+    if (conf.contains(ShufflePartitions)) None else Some(cores)
+
+  /** Apply [[coreSizedPartitions]] of `conf` to the session `s`. */
+  private[jobs] def sized(s: SparkSession, conf: SparkConf): SparkSession = {
+    coreSizedPartitions(conf, s.sparkContext.defaultParallelism)
+      .foreach(s.conf.set(ShufflePartitions, _))
+    s
+  }
+
   def local(app: String): SparkSession = {
     val s = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
@@ -27,7 +50,7 @@ private[jobs] object JobSession {
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    s
+    sized(s, s.sparkContext.getConf)
   }
 }
 

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
@@ -51,8 +53,8 @@ object AnalysisStream {
       statusCodes: Map[String, Long],
       viaHosts: Map[String, Long])
 
-  private def bump(m: Map[String, Long], k: String): Map[String, Long] =
-    m.updated(k, m.getOrElse(k, 0L) + 1L)
+  private def bump(m: mutable.HashMap[String, Long], k: String): Unit =
+    m(k) = m.getOrElse(k, 0L) + 1L
 
   private def hostOfUrl(u: String): String =
     try {
@@ -80,40 +82,41 @@ object AnalysisStream {
       state.remove()
       return Iterator.empty
     }
-    var s = state.getOption.getOrElse(
+    if (!events.hasNext) return Iterator.empty
+    // fold the batch into local counters, then build ONE HostState
+    val prev = state.getOption.getOrElse(
       HostState(Long.MaxValue, Long.MinValue, 0L, Map.empty, Map.empty, Map.empty))
-    var changed = false
+    var first = prev.first_ts
+    var last = prev.last_ts
+    var total = prev.total
+    val contentTypes = mutable.HashMap.from(prev.contentTypes)
+    val statusCodes = mutable.HashMap.from(prev.statusCodes)
+    val viaHosts = mutable.HashMap.from(prev.viaHosts)
     events.foreach { e =>
-      changed = true
-      val ct = e.mimetype.orElse(e.content_type).getOrElse("unknown-content-type")
-      val sc = e.status_code.map(_.toString).getOrElse("-")
+      total += 1
+      bump(contentTypes,
+        e.mimetype.orElse(e.content_type).getOrElse("unknown-content-type"))
+      bump(statusCodes, e.status_code.map(_.toString).getOrElse("-"))
       val viaH = e.via.map(hostOfUrl).getOrElse("")
+      if (viaH.nonEmpty && viaH != host) bump(viaHosts, viaH)
       // null event time: count the record but don't fold a bogus epoch-0
       // into the first/last-seen bounds
-      val hasTs = e.event_ts != null
-      val ts = if (hasTs) e.event_ts.getTime else 0L
-      s = s.copy(
-        first_ts = if (hasTs) math.min(s.first_ts, ts) else s.first_ts,
-        last_ts = if (hasTs) math.max(s.last_ts, ts) else s.last_ts,
-        total = s.total + 1,
-        contentTypes = bump(s.contentTypes, ct),
-        statusCodes = bump(s.statusCodes, sc),
-        viaHosts = if (viaH.nonEmpty && viaH != host) bump(s.viaHosts, viaH)
-                   else s.viaHosts)
+      if (e.event_ts != null) {
+        val ts = e.event_ts.getTime
+        first = math.min(first, ts)
+        last = math.max(last, ts)
+      }
     }
-    if (!changed) Iterator.empty
-    else {
-      state.update(s)
-      ttlMs.foreach(state.setTimeoutDuration)
-      // sentinels mean "no timestamped event seen yet" — emit null bounds
-      // (Timestamp(Long.MaxValue) overflows Catalyst's µs conversion)
-      val first = if (s.first_ts == Long.MaxValue) null
-        else new java.sql.Timestamp(s.first_ts)
-      val last = if (s.last_ts == Long.MinValue) null
-        else new java.sql.Timestamp(s.last_ts)
-      Iterator.single(HostStatsRow(host, first, last,
-        s.total, s.contentTypes, s.statusCodes, s.viaHosts))
-    }
+    val s = HostState(first, last, total, contentTypes.toMap,
+      statusCodes.toMap, viaHosts.toMap)
+    state.update(s)
+    ttlMs.foreach(state.setTimeoutDuration)
+    // sentinels mean "no timestamped event seen yet" — emit null bounds
+    // (Timestamp(Long.MaxValue) overflows Catalyst's µs conversion)
+    val firstTs = if (first == Long.MaxValue) null else new java.sql.Timestamp(first)
+    val lastTs = if (last == Long.MinValue) null else new java.sql.Timestamp(last)
+    Iterator.single(HostStatsRow(host, firstTs, lastTs,
+      s.total, s.contentTypes, s.statusCodes, s.viaHosts))
   }
 
   /** A4 streaming form: per-host rolling stats via flatMapGroupsWithState,
@@ -370,7 +373,7 @@ object AnalysisStream {
       rehydrate: Boolean = true)
       (implicit spark: SparkSession) = {
     import org.apache.spark.sql.streaming.Trigger
-    val accumulated = scala.collection.mutable.Map[String, HostStatsRow]()
+    val accumulated = mutable.Map[String, HostStatsRow]()
     if (rehydrate) {
       val seeded = rehydrateHostStats(spark, checkpoint)
         .orderBy(desc("last_ts"), col("host")).limit(topN).collect()
@@ -391,14 +394,15 @@ object AnalysisStream {
         val rows = batch.collect()
         accumulated.synchronized {
           rows.foreach(r => accumulated(r.host) = r)
+          // one sort per trigger: its top `topN` both prune the
+          // accumulator and are the published snapshot
+          val ordered = accumulated.values.toSeq.sorted(byRecencyDesc).take(topN)
           if (accumulated.size > topN) {
-            val keep = accumulated.values.toSeq
-              .sorted(byRecencyDesc).take(topN).map(_.host).toSet
+            val keep = ordered.iterator.map(_.host).toSet
             accumulated.filterInPlace { case (h, _) => keep(h) }
           }
           // snapshot is driver-local and already bounded — serialize
           // directly, no Spark job on the publish hot path
-          val ordered = accumulated.values.toSeq.sorted(byRecencyDesc)
           writeSnapshotRowsAtomic(ordered, outPath)
         }
       }

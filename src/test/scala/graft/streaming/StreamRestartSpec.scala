@@ -109,6 +109,66 @@ class StreamRestartSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("hostStats snapshot: a checkpoint first started at 200 state " +
+      "partitions resumes with exact counts under a 4-partition session") {
+    import java.nio.file.{Files, StandardCopyOption}
+    import org.apache.spark.sql.Encoders
+    val dir = Files.createTempDirectory("parts-ckpt")
+    val inDir = Files.createDirectories(dir.resolve("in"))
+    val out = dir.resolve("stats.json").toString
+    val ckpt = dir.resolve("ckpt").toString
+    val enc = Encoders.product[StatEvent]
+
+    // one JSON-lines file per batch, moved in whole so the file source
+    // never lists a half-written file
+    def feed(name: String, events: (String, String, Int)*): Unit = {
+      val body = events.map { case (host, t, status) =>
+        s"""{"host":"$host","event_ts":"${t}Z","status_code":$status,""" +
+          """"mimetype":"text/html"}"""
+      }.mkString("", "\n", "\n")
+      val tmp = Files.writeString(dir.resolve(name), body)
+      Files.move(tmp, inDir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+    }
+    // the service's topology under a scoped session with `partitions`
+    // shuffle partitions (the shared session's confs stay untouched);
+    // returns the state partition count the data batch ran with
+    def runOnce(partitions: Int): Long = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", partitions.toLong)
+      val events = s.readStream.schema(enc.schema).json(inDir.toString).as(enc)
+      val q = snapshotQuery(hostStats(events), out, topN = 500,
+        intervalMs = 100L, checkpoint = ckpt)(s).start()
+      try {
+        q.processAllAvailable()
+        q.recentProgress.filter(_.numInputRows > 0).last
+          .stateOperators.head.numShufflePartitions
+      } finally q.stop()
+    }
+
+    feed("b1.json", ("a.org", "2021-01-16T17:00:00", 200),
+      ("a.org", "2021-01-16T17:05:00", 404),
+      ("b.org", "2021-01-16T17:01:00", 200),
+      ("c.org", "2021-01-16T17:02:00", 301))
+    assert(runOnce(200) === 200L)
+    feed("b2.json", ("a.org", "2021-01-16T18:00:00", 200),
+      ("b.org", "2021-01-16T18:01:00", 200),
+      ("b.org", "2021-01-16T18:02:00", 404),
+      ("d.org", "2021-01-16T18:03:00", 200))
+    // the offset log pins the checkpoint's count over the session's 4
+    assert(runOnce(4) === 200L, "state partition count not pinned")
+
+    val expected = Map("a.org" -> 3L, "b.org" -> 3L, "c.org" -> 1L, "d.org" -> 1L)
+    val snap = spark.read.option("multiLine", "true").json(out).collect()
+      .map(r => r.getAs[String]("host") -> r).toMap
+    assert(snap.view.mapValues(_.getAs[Long]("total")).toMap === expected)
+    val aCodes = snap("a.org").getAs[org.apache.spark.sql.Row]("statusCodes")
+    assert(aCodes.getAs[Long]("200") === 2L && aCodes.getAs[Long]("404") === 1L)
+    val state = rehydrateHostStats(spark, ckpt).collect()
+    assert(state.map(r => r.host -> r.total).toMap === expected)
+    assert(state.find(_.host == "b.org").get.statusCodes ===
+      Map("200" -> 2L, "404" -> 1L))
+  }
+
   test("lateness below the horizon is rejected up front") {
     implicit val sqlCtx = spark.sqlContext
     val lIn = MemoryStream[(String, java.sql.Timestamp)]
