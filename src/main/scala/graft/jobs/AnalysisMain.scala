@@ -26,6 +26,14 @@ import graft.streaming.{AnalysisStream, CrawlStreams}
   * `spark-submit --conf spark.sql.shuffle.partitions=N` before that first
   * start. A checkpoint created before the core-count default keeps
   * Spark's 200.
+  *
+  * A `file:` checkpoint, input or snapshot directory goes through the
+  * fork-free local filesystem ([[graft.sources.LocalFs]]): Hadoop's own
+  * minus the `chmod`/`readlink` process it starts per checkpoint file
+  * without `libhadoop`. `spark.hadoop.fs.file.impl` and
+  * `spark.hadoop.fs.AbstractFileSystem.file.impl` in the Spark conf
+  * override it. On-disk formats, `.crc` sidecars and Spark's checkpoint
+  * checksums are unchanged, so existing checkpoints resume as they are.
   */
 object AnalysisMain {
   private val usage = "usage: AnalysisMain <inputDir> <snapshotPath> " +

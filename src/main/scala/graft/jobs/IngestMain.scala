@@ -28,6 +28,12 @@ import graft.streaming.PipelineStreams
   * `-Dspark.sql.shuffle.partitions=N` or `spark-submit --conf
   * spark.sql.shuffle.partitions=N` before that first start. A checkpoint
   * created before the core-count default keeps Spark's 200.
+  *
+  * `file:` paths go through the fork-free local filesystem
+  * ([[graft.sources.LocalFs]]; `spark.hadoop.fs.file.impl` and
+  * `spark.hadoop.fs.AbstractFileSystem.file.impl` in the Spark conf
+  * override it). On-disk formats, `.crc` sidecars and Spark's checkpoint
+  * checksums are unchanged, so existing checkpoints resume as they are.
   */
 object IngestMain {
   private val usage = "usage: IngestMain <docs.jsonl> <corpus.parquet> " +

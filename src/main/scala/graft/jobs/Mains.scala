@@ -5,6 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.CrawlCols
 import graft.schema.CrawlSchemas
+import graft.sources.LocalFs
 
 /** CLI-equivalent drivers mirroring the reference's entry points
   * (SURVEY.md §3, setup.py:23-27). Each main is arg-parsing + sink choice
@@ -42,12 +43,23 @@ private[jobs] object JobSession {
     s
   }
 
+  /** The production mains' session. Two rules apply to every main:
+    *  - shuffle and state partitions are sized to the cores
+    *    ([[coreSizedPartitions]]);
+    *  - `file:` paths use the fork-free local filesystem
+    *    ([[graft.sources.LocalFs]]) unless the SparkConf names
+    *    `spark.hadoop.fs.file.impl` or
+    *    `spark.hadoop.fs.AbstractFileSystem.file.impl`, which then stand.
+    *    On-disk formats, `.crc` sidecars and Spark's checkpoint checksums
+    *    are Hadoop's own, so existing checkpoints resume as they are.
+    */
   def local(app: String): SparkSession = {
     val s = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName(app)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
+      .config(LocalFs.confs(new SparkConf()).toMap)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     sized(s, s.sparkContext.getConf)

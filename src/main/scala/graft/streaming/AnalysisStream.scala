@@ -408,17 +408,46 @@ object AnalysisStream {
       }
   }
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  /** `s` as a JSON string: quote and backslash escaped, control
+    * characters as four-hex-digit unicode escapes, all else as is. */
+  private def appendJsonStr(sb: java.lang.StringBuilder, s: String): Unit = {
+    sb.append('"')
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == '"') sb.append("\\\"")
+      else if (c == '\\') sb.append("\\\\")
+      else if (c < ' ') sb.append("\\u00").append(hexDigits(c >> 4))
+        .append(hexDigits(c & 0xf))
+      else sb.append(c)
+      i += 1
+    }
+    sb.append('"')
+  }
 
-  private def jsonMap(m: Map[String, Long]): String =
-    m.toSeq.sortBy(_._1).map { case (k, v) => s"${jsonStr(k)}:$v" }
-      .mkString("{", ",", "}")
+  private val hexDigits = "0123456789abcdef"
+
+  /** `"name":{...}` with the keys in sorted order. */
+  private def appendJsonMap(sb: java.lang.StringBuilder, name: String,
+      m: Map[String, Long]): Unit = {
+    sb.append(",\"").append(name).append("\":{")
+    val keys = m.keys.toArray.sorted
+    var i = 0
+    while (i < keys.length) {
+      if (i > 0) sb.append(',')
+      appendJsonStr(sb, keys(i))
+      sb.append(':').append(m(keys(i)))
+      i += 1
+    }
+    sb.append('}')
+  }
+
+  private def appendJsonTs(sb: java.lang.StringBuilder, name: String,
+      t: java.sql.Timestamp): Unit =
+    if (t != null) {
+      sb.append(",\"").append(name).append("\":")
+      appendJsonStr(sb, snapshotTsFmt.format(t.toInstant))
+    }
 
   /** ISO-8601 UTC, millisecond precision — the same rendering `to_json`
     * gives a TimestampType under a UTC session timezone, and stable across
@@ -429,24 +458,26 @@ object AnalysisStream {
     .withZone(java.time.ZoneOffset.UTC)
 
   /** Driver-local snapshot serialization (same field names as the
-    * DataFrame JSON form; null timestamps omitted like to_json would).
+    * DataFrame JSON form; null timestamps omitted like to_json would),
+    * built in one buffer: it runs on the stream thread every trigger.
     */
   private[streaming] def writeSnapshotRowsAtomic(rows: Seq[HostStatsRow],
       outPath: String): Unit = {
-    val body = rows.map { r =>
-      val ts = Seq(
-        Option(r.first_ts).map(t =>
-          s""""first_ts":${jsonStr(snapshotTsFmt.format(t.toInstant))}"""),
-        Option(r.last_ts).map(t =>
-          s""""last_ts":${jsonStr(snapshotTsFmt.format(t.toInstant))}""")
-      ).flatten
-      (Seq(s""""host":${jsonStr(r.host)}""") ++ ts ++ Seq(
-        s""""total":${r.total}""",
-        s""""contentTypes":${jsonMap(r.contentTypes)}""",
-        s""""statusCodes":${jsonMap(r.statusCodes)}""",
-        s""""viaHosts":${jsonMap(r.viaHosts)}"""))
-        .mkString("{", ",", "}")
-    }.mkString("[", ",", "]")
-    publishAtomic(outPath, body)
+    val sb = new java.lang.StringBuilder()
+    sb.append('[')
+    rows.foreach { r =>
+      if (sb.length > 1) sb.append(',')
+      sb.append("{\"host\":")
+      appendJsonStr(sb, r.host)
+      appendJsonTs(sb, "first_ts", r.first_ts)
+      appendJsonTs(sb, "last_ts", r.last_ts)
+      sb.append(",\"total\":").append(r.total)
+      appendJsonMap(sb, "contentTypes", r.contentTypes)
+      appendJsonMap(sb, "statusCodes", r.statusCodes)
+      appendJsonMap(sb, "viaHosts", r.viaHosts)
+      sb.append('}')
+    }
+    sb.append(']')
+    publishAtomic(outPath, sb.toString)
   }
 }

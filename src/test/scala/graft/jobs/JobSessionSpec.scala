@@ -1,16 +1,19 @@
 package graft.jobs
 
 import graft.SparkSpec
+import graft.sources.{LocalFs, NioLocalFileSystem, NioLocalFs}
 import org.apache.spark.SparkConf
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The production mains' shuffle/state partition rule: the core count,
-  * unless the SparkConf names a count. Exercised on the pure rule and on
-  * scoped child sessions, so the test JVM needs no second SparkContext and
-  * the shared session's confs stay as they are.
+/** The production mains' session rules: shuffle/state partitions at the
+  * core count unless the SparkConf names a count, and the fork-free `file:`
+  * filesystem unless the SparkConf names one. Exercised on the pure rules
+  * and on scoped child sessions, so the test JVM needs no second
+  * SparkContext and the shared session's confs stay as they are.
   */
 class JobSessionSpec extends AnyFunSuite with SparkSpec {
   import JobSession.{ShufflePartitions, coreSizedPartitions, sized}
+  import LocalFs.{AbstractFileSystemKey, FileSystemKey}
 
   private def conf(kv: (String, String)*) = new SparkConf(false).setAll(kv)
 
@@ -42,5 +45,23 @@ class JobSessionSpec extends AnyFunSuite with SparkSpec {
     assert(s.sparkContext eq spark.sparkContext)
     assert(s.conf.get(ShufflePartitions) ===
       spark.sparkContext.getConf.get(ShufflePartitions))
+  }
+
+  test("an unset conf gets both fork-free filesystem keys") {
+    val expected = Map(FileSystemKey -> classOf[NioLocalFileSystem].getName,
+      AbstractFileSystemKey -> classOf[NioLocalFs].getName)
+    assert(LocalFs.confs(conf()).toMap === expected)
+    assert(LocalFs.confs(conf("spark.hadoop.fs.other" -> "x")).toMap === expected)
+  }
+
+  test("a filesystem key set in the SparkConf wins") {
+    val stockFs = "org.apache.hadoop.fs.LocalFileSystem"
+    val stockAfs = "org.apache.hadoop.fs.local.LocalFs"
+    assert(LocalFs.confs(conf(FileSystemKey -> stockFs)) ===
+      Seq(AbstractFileSystemKey -> classOf[NioLocalFs].getName))
+    assert(LocalFs.confs(conf(AbstractFileSystemKey -> stockAfs)) ===
+      Seq(FileSystemKey -> classOf[NioLocalFileSystem].getName))
+    assert(LocalFs.confs(
+      conf(FileSystemKey -> stockFs, AbstractFileSystemKey -> stockAfs)).isEmpty)
   }
 }

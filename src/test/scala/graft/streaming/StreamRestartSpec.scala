@@ -109,18 +109,19 @@ class StreamRestartSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("hostStats snapshot: a checkpoint first started at 200 state " +
-      "partitions resumes with exact counts under a 4-partition session") {
+  /** The analyse service's topology (`hostStats` -> `snapshotQuery`) over
+    * a file source in a temp dir, each run in a scoped child session so
+    * the shared session's confs stay untouched. */
+  private class HostStatsRun(prefix: String) {
     import java.nio.file.{Files, StandardCopyOption}
-    import org.apache.spark.sql.Encoders
-    val dir = Files.createTempDirectory("parts-ckpt")
-    val inDir = Files.createDirectories(dir.resolve("in"))
-    val out = dir.resolve("stats.json").toString
-    val ckpt = dir.resolve("ckpt").toString
-    val enc = Encoders.product[StatEvent]
+    private val dir = Files.createTempDirectory(prefix)
+    private val inDir = Files.createDirectories(dir.resolve("in"))
+    private val out = dir.resolve("stats.json").toString
+    private val ckpt = dir.resolve("ckpt").toString
+    private val enc = org.apache.spark.sql.Encoders.product[StatEvent]
 
-    // one JSON-lines file per batch, moved in whole so the file source
-    // never lists a half-written file
+    /** One JSON-lines file per batch, moved in whole so the file source
+      * never lists a half-written file. */
     def feed(name: String, events: (String, String, Int)*): Unit = {
       val body = events.map { case (host, t, status) =>
         s"""{"host":"$host","event_ts":"${t}Z","status_code":$status,""" +
@@ -129,12 +130,12 @@ class StreamRestartSpec extends AnyFunSuite with SparkSpec {
       val tmp = Files.writeString(dir.resolve(name), body)
       Files.move(tmp, inDir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
     }
-    // the service's topology under a scoped session with `partitions`
-    // shuffle partitions (the shared session's confs stay untouched);
-    // returns the state partition count the data batch ran with
-    def runOnce(partitions: Int): Long = {
+
+    /** Drain the fed files in a child session with `confs` set; returns
+      * the state partition count the data batch ran with. */
+    def runOnce(confs: (String, String)*): Long = {
       val s = spark.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", partitions.toLong)
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
       val events = s.readStream.schema(enc.schema).json(inDir.toString).as(enc)
       val q = snapshotQuery(hostStats(events), out, topN = 500,
         intervalMs = 100L, checkpoint = ckpt)(s).start()
@@ -145,28 +146,75 @@ class StreamRestartSpec extends AnyFunSuite with SparkSpec {
       } finally q.stop()
     }
 
-    feed("b1.json", ("a.org", "2021-01-16T17:00:00", 200),
+    /** The published snapshot and the checkpoint's state both hold
+      * exactly `expected` events per host; returns both, by host. */
+    def assertCounts(expected: Map[String, Long])
+        : (Map[String, org.apache.spark.sql.Row], Map[String, HostStatsRow]) = {
+      val snap = spark.read.option("multiLine", "true").json(out).collect()
+        .map(r => r.getAs[String]("host") -> r).toMap
+      assert(snap.view.mapValues(_.getAs[Long]("total")).toMap === expected)
+      val state = rehydrateHostStats(spark, ckpt).collect()
+        .map(r => r.host -> r).toMap
+      assert(state.view.mapValues(_.total).toMap === expected)
+      (snap, state)
+    }
+  }
+
+  test("hostStats snapshot: a checkpoint first started at 200 state " +
+      "partitions resumes with exact counts under a 4-partition session") {
+    val run = new HostStatsRun("parts-ckpt")
+    val partitions = "spark.sql.shuffle.partitions"
+    run.feed("b1.json", ("a.org", "2021-01-16T17:00:00", 200),
       ("a.org", "2021-01-16T17:05:00", 404),
       ("b.org", "2021-01-16T17:01:00", 200),
       ("c.org", "2021-01-16T17:02:00", 301))
-    assert(runOnce(200) === 200L)
-    feed("b2.json", ("a.org", "2021-01-16T18:00:00", 200),
+    assert(run.runOnce(partitions -> "200") === 200L)
+    run.feed("b2.json", ("a.org", "2021-01-16T18:00:00", 200),
       ("b.org", "2021-01-16T18:01:00", 200),
       ("b.org", "2021-01-16T18:02:00", 404),
       ("d.org", "2021-01-16T18:03:00", 200))
     // the offset log pins the checkpoint's count over the session's 4
-    assert(runOnce(4) === 200L, "state partition count not pinned")
+    assert(run.runOnce(partitions -> "4") === 200L,
+      "state partition count not pinned")
 
-    val expected = Map("a.org" -> 3L, "b.org" -> 3L, "c.org" -> 1L, "d.org" -> 1L)
-    val snap = spark.read.option("multiLine", "true").json(out).collect()
-      .map(r => r.getAs[String]("host") -> r).toMap
-    assert(snap.view.mapValues(_.getAs[Long]("total")).toMap === expected)
+    val (snap, state) = run.assertCounts(
+      Map("a.org" -> 3L, "b.org" -> 3L, "c.org" -> 1L, "d.org" -> 1L))
     val aCodes = snap("a.org").getAs[org.apache.spark.sql.Row]("statusCodes")
     assert(aCodes.getAs[Long]("200") === 2L && aCodes.getAs[Long]("404") === 1L)
-    val state = rehydrateHostStats(spark, ckpt).collect()
-    assert(state.map(r => r.host -> r.total).toMap === expected)
-    assert(state.find(_.host == "b.org").get.statusCodes ===
-      Map("200" -> 2L, "404" -> 1L))
+    assert(state("b.org").statusCodes === Map("200" -> 2L, "404" -> 1L))
+  }
+
+  test("hostStats snapshot: a checkpoint written by Hadoop's stock file: " +
+      "filesystem resumes with exact counts on the fork-free one, and back") {
+    import org.apache.hadoop.fs.{FileContext, FileSystem}
+    // Hadoop's own classes for the child session (the FileSystem cache is
+    // keyed by scheme, not conf, so the stock run bypasses it)
+    val stock = Seq(
+      "fs.file.impl" -> "org.apache.hadoop.fs.LocalFileSystem",
+      "fs.file.impl.disable.cache" -> "true",
+      "fs.AbstractFileSystem.file.impl" -> "org.apache.hadoop.fs.local.LocalFs")
+    val stockConf = spark.newSession()
+    stock.foreach { case (k, v) => stockConf.conf.set(k, v) }
+    val hconf = stockConf.sessionState.newHadoopConf()
+    val root = java.net.URI.create("file:///")
+    assert(FileContext.getFileContext(root, hconf).getDefaultFileSystem
+      .getClass.getName === "org.apache.hadoop.fs.local.LocalFs")
+    assert(FileSystem.get(root, hconf).getClass.getName ===
+      "org.apache.hadoop.fs.LocalFileSystem")
+
+    val run = new HostStatsRun("stockfs-ckpt")
+    run.feed("b1.json", ("a.org", "2021-01-16T17:00:00", 200),
+      ("a.org", "2021-01-16T17:05:00", 404),
+      ("b.org", "2021-01-16T17:01:00", 200))
+    run.runOnce(stock: _*)
+    run.feed("b2.json", ("a.org", "2021-01-16T18:00:00", 200),
+      ("c.org", "2021-01-16T18:01:00", 200))
+    run.runOnce() // the shared session's fork-free filesystem
+    run.assertCounts(Map("a.org" -> 3L, "b.org" -> 1L, "c.org" -> 1L))
+    run.feed("b3.json", ("b.org", "2021-01-16T19:00:00", 301),
+      ("c.org", "2021-01-16T19:01:00", 200))
+    run.runOnce(stock: _*)
+    run.assertCounts(Map("a.org" -> 3L, "b.org" -> 2L, "c.org" -> 2L))
   }
 
   test("lateness below the horizon is rejected up front") {
