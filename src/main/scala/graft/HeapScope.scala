@@ -27,9 +27,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * along — verified against the Spark 4.1 constructor, which passes
   * `initialSessionOptions` through) but gets a fresh SQLConf, so the
   * raise set here is invisible to every other query in the run. The
-  * scoped queries read parquet and use only Column-API expressions —
-  * no session-registered SQL functions — so the fresh SessionState
-  * changes nothing else about their plans.
+  * child also takes the parent's runtime shuffle partition count and
+  * [[graft.jobs.JobSession.install]]'s pushdown rule and SQL functions,
+  * so the fresh SessionState changes nothing else about the scoped plans.
   */
 object HeapScope {
 
@@ -56,8 +56,8 @@ object HeapScope {
     * child per parent (identity-keyed, weakly held): `newSession()` is
     * ~2 ms, but each fresh session also starts with an empty relation
     * cache, so per-call children would re-list/re-footer the parquet
-    * tables every invocation (~+0.1 s/query measured by
-    * HeapScopeOverheadProbe) — the memoized child amortizes that like
+    * tables every invocation (~+0.1 s/query; NOTES.md, round 16, "The
+    * raise is SCOPED anyway") — the memoized child amortizes that like
     * any long-lived session. */
   private val children =
     new java.util.WeakHashMap[SparkSession, SparkSession]()
@@ -67,16 +67,10 @@ object HeapScope {
     if (cached != null) cached
     else {
       val c = s.newSession()
+      val partitions = "spark.sql.shuffle.partitions"
+      c.conf.set(partitions, s.conf.get(partitions))
       c.conf.set(Conf, Raised)
-      // newSession() gives a FRESH SessionState: the parent's injected
-      // optimizer rule and registered SQL functions do not carry over.
-      // Today's Keys are Column-API-only timestamp-free plans, but a
-      // future scoped key using `host_of_url(...)` via SQL or an
-      // events time-range filter would otherwise fail or plan
-      // differently only at runtime (r16 ADVICE) — re-apply the
-      // standard session setup the entrypoints give their parents.
-      graft.plans.TimestampFilterPushdown.enable(c)
-      graft.functions.CrawlCols.register(c)
+      graft.jobs.JobSession.install(c)
       children.put(s, c)
       c
     }

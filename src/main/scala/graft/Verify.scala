@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -17,18 +16,7 @@ object Verify {
     only.foreach(n => require(SparkEntry.queries.contains(n),
       s"unknown query: $n"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the objectHashAggregate fallback raise moved OFF the session
-      // builder: it travels with the capped-heap queries through
-      // graft.HeapScope's child session (r16 — blast-radius scoping)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.TimestampFilterPushdown.enable(spark)
-    graft.functions.CrawlCols.register(spark)
+    val spark = graft.jobs.JobSession.local("graft-verify", s"local[$cpus]")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (selected(name)) {

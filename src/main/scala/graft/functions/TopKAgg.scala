@@ -12,7 +12,8 @@ import org.apache.spark.sql.expressions.Aggregator
   * per-domain cap — the C4/RefinedWeb curation case) becomes one
   * unsplittable hot task that grows linearly with the corpus (the same
   * class as the digest-keyed window DedupOps.firstOccurrence replaced,
-  * measured in SkewBench). This aggregator's buffer is CAPPED at k: the
+  * measured in NOTES.md, round 8, "De-skew of the digest first-occurrence
+  * passes"). This aggregator's buffer is CAPPED at k: the
   * hash-aggregate's map-side partials each carry at most k entries, so the
   * hottest group costs O(partitions · k) at the final merge — independent
   * of the group's row count.

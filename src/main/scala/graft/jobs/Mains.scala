@@ -1,9 +1,11 @@
 package graft.jobs
 
-import org.apache.spark.SparkConf
+import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import graft.functions.CrawlCols
+import graft.plans.TimestampFilterPushdown
 import graft.schema.CrawlSchemas
 import graft.sources.LocalFs
 
@@ -11,7 +13,7 @@ import graft.sources.LocalFs
   * (SURVEY.md §3, setup.py:23-27). Each main is arg-parsing + sink choice
   * only — all logic lives in the operator modules.
   */
-private[jobs] object JobSession {
+private[graft] object JobSession {
   /** Uniform CLI contract: malformed invocations print usage and exit 2
     * (never a bare MatchError). */
   def usageExit(usage: String, detail: String = ""): Nothing = {
@@ -22,6 +24,7 @@ private[jobs] object JobSession {
   }
 
   private[jobs] val ShufflePartitions = "spark.sql.shuffle.partitions"
+  private[jobs] val UiEnabled = "spark.ui.enabled"
 
   /** The shuffle (and so state-store) partition count a session must be
     * given: the core count, unless the SparkConf already names one
@@ -36,33 +39,53 @@ private[jobs] object JobSession {
       cores: Int): Option[Int] =
     if (conf.contains(ShufflePartitions)) None else Some(cores)
 
-  /** Apply [[coreSizedPartitions]] of `conf` to the session `s`. */
-  private[jobs] def sized(s: SparkSession, conf: SparkConf): SparkSession = {
-    coreSizedPartitions(conf, s.sparkContext.defaultParallelism)
-      .foreach(s.conf.set(ShufflePartitions, _))
-    s
+  /** The fixed confs every session gets, less any key the SparkConf
+    * already sets: UTC, AQE on, the UI off and the fork-free `file:`
+    * filesystem ([[LocalFs.confs]]). */
+  private[jobs] def defaults(conf: SparkConf): Seq[(String, String)] =
+    Seq("spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.adaptive.enabled" -> "true",
+      UiEnabled -> "false")
+      .filterNot { case (k, _) => conf.contains(k) } ++ LocalFs.confs(conf)
+
+  /** The one session factory: the production mains, `Bench`, `Verify`,
+    * the tools and the tests all build their session here. On top of
+    * Spark's SparkConf (`-Dspark.*`, `spark-submit --conf`), whose values
+    * stand wherever they are set:
+    *  - UTC, AQE on and the UI off (`-Dspark.ui.enabled=true` turns it
+    *    back on);
+    *  - shuffle and state partitions sized to the cores
+    *    ([[coreSizedPartitions]]), so `local[N]` gives N. The count is
+    *    one of the session's initial options, which `newSession()`
+    *    children inherit;
+    *  - `file:` paths use the fork-free local filesystem
+    *    ([[graft.sources.LocalFs]]). On-disk formats, `.crc` sidecars and
+    *    Spark's checkpoint checksums are Hadoop's own, so existing
+    *    checkpoints resume as they are;
+    *  - the time-filter pushdown rule and the CrawlCols SQL functions
+    *    ([[install]]).
+    * A JVM that already has a context (a test run) gets that context back.
+    */
+  def local(app: String,
+      master: String = sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+      : SparkSession = {
+    val conf = new SparkConf()
+    val sc = SparkContext.getOrCreate(conf.clone().setMaster(master)
+      .setAppName(app).setAll(defaults(conf)))
+    sc.setLogLevel("WARN")
+    val builder = ColumnBridge.onContext(SparkSession.builder(), sc)
+    coreSizedPartitions(conf, sc.defaultParallelism)
+      .foreach(n => builder.config(ShufflePartitions, n.toLong))
+    install(builder.getOrCreate())
   }
 
-  /** The production mains' session. Two rules apply to every main:
-    *  - shuffle and state partitions are sized to the cores
-    *    ([[coreSizedPartitions]]);
-    *  - `file:` paths use the fork-free local filesystem
-    *    ([[graft.sources.LocalFs]]) unless the SparkConf names
-    *    `spark.hadoop.fs.file.impl` or
-    *    `spark.hadoop.fs.AbstractFileSystem.file.impl`, which then stand.
-    *    On-disk formats, `.crc` sidecars and Spark's checkpoint checksums
-    *    are Hadoop's own, so existing checkpoints resume as they are.
-    */
-  def local(app: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName(app)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(LocalFs.confs(new SparkConf()).toMap)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    sized(s, s.sparkContext.getConf)
+  /** The session-state half of [[local]], for sessions that start with
+    * a fresh `SessionState` (`newSession()` children): the time-filter
+    * pushdown rule and the CrawlCols SQL functions. Idempotent. */
+  def install(s: SparkSession): SparkSession = {
+    TimestampFilterPushdown.enable(s)
+    CrawlCols.register(s)
+    s
   }
 }
 

@@ -138,7 +138,8 @@ object DedupOps {
     // filter pipeline as [[digestedLines]], expressed over the array), and
     // n_kept per doc is a rollup of the per-DIGEST min table, which the
     // partial aggregate already collapsed to one row per distinct line.
-    // The round-8 SkewBench measurement (NOTES.md) is why this is not the
+    // The round-8 de-skew measurement (NOTES.md, "De-skew of the digest
+    // first-occurrence passes") is why this is not the
     // instance⋈min-table join VERDICT r7 sketched: on a 2M-doc corpus
     // with a 50%-hot nav line the join-back ran ~1.6× SLOWER than even
     // the window form and still funneled the hot digest into one join
@@ -1545,13 +1546,14 @@ object DedupOps {
     ccWithRounds(nodes, edges, maxIter, reliable)._1
 
   /** [[connectedComponents]] plus the OBSERVED convergence round count —
-    * package-private for [[graft.tools.GraphGrowthProbe]], which pins
-    * the pointer-halving contract (rounds grow ~log2(diameter), not
-    * diameter) on graphs whose diameter actually grows. */
+    * package-private for PipelineOpsSpec, which pins the pointer-halving
+    * contract (rounds grow ~log2(diameter), not diameter) on path graphs
+    * of growing diameter; the graph-growth measurement is in NOTES.md,
+    * round 15, "Graph growth measured" (GRAPHGROWTH_r15.json). */
   private[graft] def ccWithRounds(nodes: DataFrame, edges: DataFrame,
       maxIter: Int = 50, reliable: Boolean = false): (DataFrame, Int) = {
     // maxIter bounds rounds ~ log2(diameter) + slack (pointer halving,
-    // measured exactly log2(d) on path graphs — GraphGrowthProbe); 25
+    // measured exactly log2(d) on path graphs — GRAPHGROWTH_r15.json); 25
     // was too tight for the 100x image-dup graph's ~2M-node near-dup
     // chains (m09@100x reached the cap still converging, r16). 50
     // covers any diameter to ~2^48 — rounds above convergence never
@@ -1660,7 +1662,8 @@ object DedupOps {
     * Scale shape: the obvious window
     * (`row_number over (partition by group order by priority)`) puts a
     * giant domain's ENTIRE row set in one sort task — the skewed-window
-    * class SkewBench measured. This form aggregates with
+    * class measured in NOTES.md, round 8, "De-skew of the digest
+    * first-occurrence passes". This form aggregates with
     * [[graft.functions.TopKAgg]] — map-side partials bounded at `cap`
     * entries each, so the hottest domain costs O(partitions·cap) at the
     * merge — then joins the (group, id, rank) survivors back to the

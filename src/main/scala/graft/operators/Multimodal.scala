@@ -479,7 +479,8 @@ object Multimodal {
     // written once per release — the pin is the in-one-query
     // equivalent.
     val bits = audioFullBits(media, windowFrames).toDF().localCheckpoint()
-    // Scale design (r17, after MediaBandProbe): collapse print-identical
+    // Scale design (r17; NOTES.md, round 17, "m-family 100× wall closed
+    // by DISTINCT-PRINT COLLAPSE"): collapse print-identical
     // clips to one representative per distinct (n_windows, n_bits, fa,
     // fb) print before the band self-join — the visualClusters move
     // (measured there: 99.8%+ of band-bucket pair mass is C(group, 2)
@@ -678,7 +679,8 @@ object Multimodal {
     */
   def visualClusters(media: Dataset[MediaRow],
       maxHamming: Int = 3): DataFrame = {
-    // Scale design (r17, after MediaBandProbe at 10×/100×): the band
+    // Scale design (r17, measured at 10×/100×; NOTES.md, round 17,
+    // "m-family 100× wall closed by DISTINCT-PRINT COLLAPSE"): the band
     // self-join emits C(bucket, 2) pairs per (band, key) bucket, and
     // the measured mass is ~99.8% PRINT-IDENTICAL duplicate groups
     // (raw/distinct pair ratio 626× at 10× — dup-dense corpora pile

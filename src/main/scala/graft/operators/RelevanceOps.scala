@@ -1023,9 +1023,9 @@ object RelevanceOps {
     // here the per-ROUND driver work is the wall): every round's frames
     // embed fresh merge literals, so each of the ~3 plans per round pays
     // whole-stage-codegen setup over KB-scale pinned state — measured
-    // 7.00 → 5.00 s best on t44 (32 rounds, sf0.1/c32, BpeLoopProbe
-    // best-of-3: default 7.00 / no-wscg 5.31 / interpreted 5.00, control
-    // re-run 6.84). Interpreted eval costs more per ROW, so this is
+    // 7.00 → 5.00 s best on t44 (32 rounds, sf0.1/c32, best-of-3:
+    // default 7.00 / no-wscg 5.31 / interpreted 5.00, control re-run
+    // 6.84; OPTIMIZATION_r18.md, "[opt] BPE trainer loop"). Interpreted eval costs more per ROW, so this is
     // gated on the pinned vocab's own AQE-coalesced partition count —
     // a SIZE signal (~64 MB advisory target per partition), not a
     // core-count tune: a corpus whose vocab spans > 2 partitions keeps

@@ -1943,10 +1943,10 @@ object SimilarityOps {
     * production deployment executes every query against (the artifacts
     * are write-once per corpus release); the registered s38 rung
     * re-derives both sides so the DuckDB oracle can gate the whole
-    * chain. Package-private for [[graft.tools.BucketServeProbe]], which
-    * A/Bs plain-parquet vs bucketed artifact storage at the 100× ladder
-    * — the r14 verdict's watch item. MEASURED OUTCOME (r15,
-    * BUCKETSERVE_100x_r15.json): bucketing does NOT move the ~85 GB
+    * chain. The r15 A/B of plain-parquet vs bucketed artifact storage
+    * at the 100× ladder served through it (NOTES.md, round 15,
+    * "Bucketed chunk-index A/B at 100×"; BUCKETSERVE_100x_r15.json):
+    * bucketing does NOT move the ~85 GB
     * spill — the artifacts total 25 MiB at 100×, so the index-side
     * sort was never the cost; the spill is the candidate side (~330M
     * pre-distinct rows sorting for the fetch SMJ + aggregating for the

@@ -5,8 +5,8 @@ import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
-  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream,
+  FileStatus, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.SparkConf
@@ -101,6 +101,14 @@ class NioRawLocalFs(uri: URI, conf: Configuration)
 
 /** The checksummed `AbstractFileSystem` (`fs.AbstractFileSystem.file.impl`)
   * that `FileContext`, and so Spark's checkpoint manager, uses: Hadoop's
-  * `LocalFs` over [[NioRawLocalFs]]. */
+  * `LocalFs` over [[NioRawLocalFs]], with the `.crc` check on every read. */
 class NioLocalFs(uri: URI, conf: Configuration)
-    extends ChecksumFs(new NioRawLocalFs(uri, conf))
+    extends ChecksumFs(new NioRawLocalFs(uri, conf)) {
+
+  /** Hadoop's `FilterFs.open(f)` goes straight to the raw filesystem and
+    * skips the checksum, and Spark reads its offset and commit logs
+    * through `FileContext.open(f)`; route it through the checksummed
+    * `open(f, bufferSize)`. A file without a `.crc` still reads. */
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}

@@ -2,8 +2,6 @@
 // Run: sbt -batch "runMain graft.tools.ExplainAudit <sfDir> [query...]"
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
@@ -14,10 +12,7 @@ object ExplainAudit {
         "q17_asof_join", "q21_range_join", "s04_lsh_neardup", "t04_lang_id",
         "s07_ivf_probe_topk", "m02_frame_sample", "t06_hash_split",
         "d07_decontaminate", "t08_repetition")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.jobs.JobSession.local("graft-explain-audit", "local[4]")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n=============== $n ===============")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: run one registered query to completion and print the FINAL
   * adaptive plan (`isFinalPlan=true`), not the initial one. AQE re-plans
   * joins at runtime (shuffle→broadcast conversion, stage-level broadcast
@@ -21,17 +19,8 @@ object FinalPlan {
     }
     val name = a(0)
     val d = if (a.length > 1) a(1) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the objectHashAggregate fallback raise moved OFF the session
-      // builder: it travels with the capped-heap queries through
-      // graft.HeapScope's child session (r16 — blast-radius scoping)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.jobs.JobSession.local("graft-final-plan", "local[16]")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.TimestampFilterPushdown.enable(spark)
-    graft.functions.CrawlCols.register(spark)
     val df = graft.SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query '$name'"))(spark, d)
     df.collect()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -45,19 +45,13 @@ object IngestScaleProbe {
       if (args.length > 3) args(3).split(",").map(_.trim).toSet
       else Set("chunk", "bitext", "chain")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the objectHashAggregate fallback raise is NOT session-wide here:
-      // the r16 ingestChain leg runs UNCAPPED object aggregates
-      // (collect_list/sort_array in the near-dup verify and bigramLm
-      // builders) — the hazard class HeapScope scopes away. The raise is
-      // toggled on only around the capped-heap chunk/bitext sections
-      // below (r16 ADVICE).
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the objectHashAggregate fallback raise is NOT session-wide here:
+    // the r16 ingestChain leg runs UNCAPPED object aggregates
+    // (collect_list/sort_array in the near-dup verify and bigramLm
+    // builders) — the hazard class HeapScope scopes away. The raise is
+    // toggled on only around the capped-heap chunk/bitext sections
+    // below (r16 ADVICE).
+    val spark = graft.jobs.JobSession.local("graft-ingest-scale", s"local[$cpus]")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -298,8 +292,9 @@ object IngestScaleProbe {
     // state-partition sizing (r17): shuffle.partitions is captured into
     // a streaming query's checkpoint at START and sizes every state
     // store — at 32, each trigger committed 64 state-partition files
-    // for ~100-key state, and the ChainPlanProbe metrics dump read the
-    // commit time as the single largest per-trigger term. A streaming
+    // for ~100-key state, and the executed-plan metrics dump read the
+    // commit time as the single largest per-trigger term (NOTES.md,
+    // round 17, "ingestChain fixed cost"). A streaming
     // job sizes state partitions to its arrival rate at deploy time;
     // 8 fits this probe's 12–120-doc batches (and the dial is recorded
     // in the output JSON).

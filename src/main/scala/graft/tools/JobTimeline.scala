@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev probe (r17): per-JOB wall timeline of one registered query —
   * build + one noop execution — so iterative operators' driver-loop
@@ -17,19 +16,10 @@ object JobTimeline {
     val sfDir = args(0)
     val name = args(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_TL_AQE", "true"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_TL_PARTS", cpus))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.jobs.JobSession.local("graft-job-timeline", s"local[$cpus]")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.TimestampFilterPushdown.enable(spark)
-    graft.functions.CrawlCols.register(spark)
+    sys.env.get("GRAFT_TL_AQE").foreach(spark.conf.set("spark.sql.adaptive.enabled", _))
+    sys.env.get("GRAFT_TL_PARTS").foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long, String)]()
     spark.sparkContext.addSparkListener(new SparkListener {

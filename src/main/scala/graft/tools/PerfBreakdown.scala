@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe (r17 optimization round): per-query PLANNING vs EXECUTION
   * split, bench-identical session (local[$SPARK_GRAFT_CPUS], shuffle
   * partitions = cpus, AQE on, UTC, noop sink). For each named query it
@@ -27,16 +25,8 @@ object PerfBreakdown {
     val sfDir = args(0)
     val names = args.drop(1).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.jobs.JobSession.local("graft-perf-breakdown", s"local[$cpus]")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.TimestampFilterPushdown.enable(spark)
-    graft.functions.CrawlCols.register(spark)
     // bench-identical warmup: table footers + one aggregate
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: run one registered query by name against an sf dir, write
   * its parquet result, and report cold + warm wall time. Keeps per-query
   * iteration off the full Verify/Bench cycle.
@@ -18,17 +16,8 @@ object RunQuery {
     val name = a(0)
     val d = if (a.length > 1) a(1) else "/root/testdata/sf0.01"
     val out = if (a.length > 2) a(2) else s"/tmp/runquery/$name"
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the objectHashAggregate fallback raise moved OFF the session
-      // builder: it travels with the capped-heap queries through
-      // graft.HeapScope's child session (r16 — blast-radius scoping)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.jobs.JobSession.local("graft-run-query", "local[16]")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.TimestampFilterPushdown.enable(spark)
-    graft.functions.CrawlCols.register(spark)
     val fn = graft.SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query '$name'"))
     var t0 = System.nanoTime()

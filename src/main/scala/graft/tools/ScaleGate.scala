@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The 10× scale rehearsal as a REPEATABLE gate (r13 next-round #6):
@@ -30,8 +29,8 @@ object ScaleGate {
     * (s40s/s41s — see [[FullCostSet]] for the once-per-round full
     * rows). g01/g03 joined in r15 once the ladder grew an events slice
     * (their corpus-sized input — the edge/digest aggregate — now
-    * genuinely scales; the node set is fixture-capped, which is what
-    * [[GraphGrowthProbe]] covers). The incremental-ingest dedup family
+    * genuinely scales; the node set is fixture-capped, which the
+    * graph-growth measurement covers: NOTES.md, round 15, "Graph growth measured"). The incremental-ingest dedup family
     * (d17/d18/d20/d24) joined in r16 — the operators a 100 TB ingest
     * runs continuously were the last LLM-pipeline family with no scale
     * rows (r15 VERDICT #2). */
@@ -90,19 +89,8 @@ object ScaleGate {
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
 
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the objectHashAggregate fallback raise moved OFF the session
-      // builder: it travels with the capped-heap queries through
-      // graft.HeapScope's child session (r16 — blast-radius scoping)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.jobs.JobSession.local("graft-scale-gate", s"local[$cpus]")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.TimestampFilterPushdown.enable(spark)
-    graft.functions.CrawlCols.register(spark)
 
     // build-if-absent: documents+embeddings scaled, everything else
     // copied verbatim (not under test at N×, but warm-ups read them)

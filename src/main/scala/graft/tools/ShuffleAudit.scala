@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Shuffle-volume audit: runs each registered query and reports measured
   * (not guessed) execution-movement numbers from the task metrics —
@@ -39,17 +38,8 @@ object ShuffleAudit {
     val outFile = if (args.length > 1) args(1) else "SHUFFLE_AUDIT.md"
     val names = if (args.length > 2) args.drop(2).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the objectHashAggregate fallback raise moved OFF the session
-      // builder: it travels with the capped-heap queries through
-      // graft.HeapScope's child session (r16 — blast-radius scoping)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.jobs.JobSession.local("graft-shuffle-audit", "local[16]")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.TimestampFilterPushdown.enable(spark)
-    graft.functions.CrawlCols.register(spark)
     val collector = new Collector
     spark.sparkContext.addSparkListener(collector)
 

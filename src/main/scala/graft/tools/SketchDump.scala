@@ -6,7 +6,6 @@
 // Run: sbt -batch "runMain graft.tools.SketchDump <sfDir> [outCsv]"
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import graft.Tables
 import graft.operators.SimilarityOps
@@ -15,10 +14,7 @@ object SketchDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "/tmp/sketches.csv"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.jobs.JobSession.local("graft-sketch-dump", "local[4]")
     spark.sparkContext.setLogLevel("ERROR")
     // Must mirror lshNearDupPairs exactly: double-cast vector, dim=64,
     // nBits=32, default seed.

@@ -24,6 +24,13 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `builder` bound to the live context `sc` (`Builder.sparkContext` is
+    * private), so the session it builds takes the builder's options as
+    * its initial options without a second `SparkContext.getOrCreate`. */
+  def onContext(builder: org.apache.spark.sql.SparkSession.Builder,
+      sc: org.apache.spark.SparkContext): org.apache.spark.sql.SparkSession.Builder =
+    builder.sparkContext(sc)
+
   /** Expose what a `SparkSessionExtensions` instance would register
     * (`build*` are private[sql]) — lets specs verify the
     * `spark.sql.extensions=graft.plans.GraftExtensions` deployment path

@@ -332,7 +332,8 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("connected components: observed round count is logarithmic in path diameter") {
-    // the ccWithRounds counter GraphGrowthProbe gates on: doubling the
+    // the ccWithRounds counter the graph-growth measurement read (NOTES.md,
+    // round 15, "Graph growth measured"): doubling the
     // diameter 4 times (64 → 1024) may add at most ~1 round per
     // doubling if halving holds; plain propagation would add 960
     def rounds(d: Long): Int = {

@@ -285,9 +285,9 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
       // the de-skew pin (r8): first occurrence is a partial-aggregated
       // groupBy, NEVER min().over(Window.partitionBy(digest)) — a window
       // funnels every instance of the hottest line into one un-splittable
-      // task (AQE splits skewed joins, not windows), and SkewBench
-      // measured the instance⋈min-table join-back alternative slower AND
-      // still hot (NOTES r8) — so no instance-sized stream may shuffle
+      // task (AQE splits skewed joins, not windows), and the r8 de-skew
+      // measurement found the instance⋈min-table join-back alternative
+      // slower AND still hot (NOTES.md, round 8) — so no instance-sized stream may shuffle
       // at all: n_lines is a per-row scalar, n_kept rolls up from the
       // collapsed min table.
       assert(!p.contains("Window"), p)

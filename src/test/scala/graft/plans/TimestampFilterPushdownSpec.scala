@@ -41,8 +41,11 @@ class TimestampFilterPushdownSpec extends AnyFunSuite with SparkSpec {
 
   test("native µs events table pushes timestamp predicates without the rule") {
     // the current testdata generation stores timestamp[us]; a plain
-    // timestamp range predicate must reach the scan natively
-    val plan = graft.Tables.eventsRange(spark, sf,
+    // timestamp range predicate must reach the scan natively. The shared
+    // session has the rule installed, so a bare child checks without it.
+    val bare = spark.newSession()
+    assert(!bare.experimental.extraOptimizations.contains(TimestampFilterPushdown))
+    val plan = graft.Tables.eventsRange(bare, sf,
         java.time.Instant.parse("2024-01-02T00:00:00Z"),
         java.time.Instant.parse("2024-01-03T00:00:00Z"))
       .queryExecution.executedPlan.toString

@@ -137,8 +137,8 @@ class LocalFsSpec extends AnyFunSuite with SparkSpec {
     assert(files(dirs(0)).keySet === Set("log", ".log.crc"))
     assert(files(dirs(1)) === files(dirs(0)))
 
-    // open(path, bufferSize) reads through ChecksumFs; Hadoop's
-    // FilterFs.open(path) skips it on either filesystem
+    // open(path, bufferSize) reads through ChecksumFs on either
+    // filesystem (open(path) is the next test's)
     def read(fc: FileContext, d: JPath) = {
       val in = fc.open(hp(d.resolve("log")), 4096)
       try new String(in.readAllBytes(), "UTF-8") finally in.close()
@@ -150,6 +150,37 @@ class LocalFsSpec extends AnyFunSuite with SparkSpec {
       Files.write(d.resolve("log"), bytes)
       intercept[ChecksumException](read(fc, d))
     }
+  }
+
+  private def readAll(fc: FileContext, p: JPath): String = {
+    val in = fc.open(hp(p))
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  test("a flipped byte fails FileContext.open(path), as Spark reads its logs") {
+    val base = Files.createTempDirectory("localfs-open")
+    val body = "x" * 1500
+    for ((name, afs) <- Seq("stock" -> "org.apache.hadoop.fs.local.LocalFs",
+        "nio" -> classOf[NioLocalFs].getName)) {
+      val fc = context(afs)
+      val log = Files.createDirectory(base.resolve(name)).resolve("log")
+      publish(fc, hp(log.getParent), body)
+      assert(readAll(fc, log) === body)
+      val bytes = Files.readAllBytes(log)
+      bytes(700) = 'y'.toByte
+      Files.write(log, bytes)
+      // Hadoop's FilterFs.open(path) skips the .crc; NioLocalFs does not
+      if (name == "stock") assert(readAll(fc, log) !== body)
+      else intercept[ChecksumException](readAll(fc, log))
+    }
+  }
+
+  test("a file without a .crc still reads through FileContext.open(path)") {
+    val dir = Files.createTempDirectory("localfs-nocrc")
+    val plain = Files.writeString(dir.resolve("plain"), "no sidecar")
+    val fc = context(classOf[NioLocalFs].getName)
+    assert(readAll(fc, plain) === "no sidecar")
+    assert(!Files.exists(dir.resolve(".plain.crc")))
   }
 
   test("the shared session's file: paths use the fork-free filesystem") {

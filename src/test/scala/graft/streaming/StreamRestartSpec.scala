@@ -117,7 +117,7 @@ class StreamRestartSpec extends AnyFunSuite with SparkSpec {
     private val dir = Files.createTempDirectory(prefix)
     private val inDir = Files.createDirectories(dir.resolve("in"))
     private val out = dir.resolve("stats.json").toString
-    private val ckpt = dir.resolve("ckpt").toString
+    val ckpt = dir.resolve("ckpt").toString
     private val enc = org.apache.spark.sql.Encoders.product[StatEvent]
 
     /** One JSON-lines file per batch, moved in whole so the file source
@@ -215,6 +215,35 @@ class StreamRestartSpec extends AnyFunSuite with SparkSpec {
       ("c.org", "2021-01-16T19:01:00", 200))
     run.runOnce(stock: _*)
     run.assertCounts(Map("a.org" -> 3L, "b.org" -> 2L, "c.org" -> 2L))
+  }
+
+  test("hostStats snapshot: a restart from a checkpoint whose last offsets " +
+      "file has a flipped byte fails with a ChecksumException") {
+    import java.nio.file.{Files, Paths}
+    val run = new HostStatsRun("crc-ckpt")
+    run.feed("b1.json", ("a.org", "2021-01-16T17:00:00", 200),
+      ("b.org", "2021-01-16T17:01:00", 404))
+    run.runOnce()
+    run.feed("b2.json", ("a.org", "2021-01-16T18:00:00", 200))
+    run.runOnce()
+    run.assertCounts(Map("a.org" -> 2L, "b.org" -> 1L))
+
+    val offsets = Paths.get(run.ckpt, "offsets")
+    val last = Files.list(offsets).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.forall(_.isDigit))
+      .maxBy(_.getFileName.toString.toLong)
+    assert(Files.exists(offsets.resolve(s".${last.getFileName}.crc")))
+    val bytes = Files.readAllBytes(last)
+    val i = bytes.length / 2
+    bytes(i) = (bytes(i) ^ 0x01).toByte
+    Files.write(last, bytes)
+
+    run.feed("b3.json", ("c.org", "2021-01-16T19:00:00", 200))
+    val e = intercept[Exception](run.runOnce())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).toSeq
+    assert(chain.exists(_.isInstanceOf[org.apache.hadoop.fs.ChecksumException]),
+      chain.map(_.toString).mkString("\n"))
   }
 
   test("lateness below the horizon is rejected up front") {
